@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.lineage.Lineage
 import graft.metrics.{Metrics, PartitionMetrics}
+import graft.pipeline.Stage
 import graft.route.Router
 
 /** Production entry point (spark-submit main): the resumable, metered
@@ -18,10 +19,36 @@ import graft.route.Router
   *
   * A re-run after a crash with the same outputRoot skips every sealed
   * bucket (see [[graft.lineage.Lineage]]), so the job is idempotent.
-  * Prints two JSON lines: the per-sink report and per-partition
-  * throughput (admin-API analogs).
+  * Prints three JSON lines: the per-sink report (`SINKS`), per-partition
+  * throughput (`PARTITIONS`; both admin-API analogs) and the lineage
+  * progress (`COMMIT`).
+  *
+  * The whole job is one SQL execution, the Lineage write. The per-sink
+  * turn and byte counts are observed on the rows as they are written,
+  * like the reference's endpoint counters growing from acks
+  * (`publisher/endpoint/api.go:34-45`); nothing committed is read back.
+  * So `SINKS` counts the rows THIS run committed: a resumed run reports
+  * only the buckets it sealed, and a re-run over a fully committed root
+  * reports none. `COMMIT`'s `buckets_total` covers every run.
   */
 object RunPipeline {
+
+  /** One run's per-sink report and the number of buckets it sealed. */
+  final case class Result(report: Metrics.Report, committed: Int)
+
+  /** The job on a caller's session: the body of [[main]]. */
+  def run(spark: SparkSession, inputDir: String, outputRoot: String, batchId: String,
+      nBuckets: Int, parseStages: Seq[Stage]): Result = {
+    val t0 = System.nanoTime()
+    val sinks = TranscriptPipeline.sinks.map(_.name) :+ TranscriptPipeline.DefaultSink
+    val turns = spark.read.parquet(inputDir)
+    val assigned = TranscriptPipeline.run(spark, turns, parseStages)
+    val outcome = Lineage.runObserving(Router.stripMeta(assigned), outputRoot, nBuckets,
+      batchId, Metrics.sinkObservations(sinks))
+    val report = Metrics.fromObserved(outcome.observed, sinks, (System.nanoTime() - t0) / 1e9)
+    Result(report, outcome.committed)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunPipeline <inputDir> <outputRoot> [batchId] [nBuckets]")
     val inputDir = args(0)
@@ -59,8 +86,6 @@ object RunPipeline {
       srv
     }
 
-    val t0 = System.nanoTime()
-
     // optional config-driven parse stages: GRAFT_PIPELINE_CONFIG points
     // at a pipeline config file in either dialect — the reference's
     // native YAML (testing/log-carver.yaml shape) or our JSON; without
@@ -72,17 +97,11 @@ object RunPipeline {
       case None => TranscriptPipeline.stages
     }
 
-    val turns = spark.read.parquet(inputDir)
-    val assigned = TranscriptPipeline.run(spark, turns, parseStages)
-    val committed = Lineage.run(Router.stripMeta(assigned), outputRoot, nBuckets, batchId)
-
-    val routed = Lineage.readData(spark, outputRoot)
-    val report = Metrics.fromSinkCounts(Router.sinkCounts(routed),
-      (System.nanoTime() - t0) / 1e9)
+    val result = run(spark, inputDir, outputRoot, batchId, nBuckets, parseStages)
     org.apache.spark.graftbridge.CoreBridge.waitListenerBusEmpty(spark.sparkContext)
-    println("SINKS " + Metrics.toJson(report))
+    println("SINKS " + Metrics.toJson(result.report))
     println("PARTITIONS " + PartitionMetrics.toJson(listener.snapshot))
-    println(s"""COMMIT {"batch_id":"$batchId","buckets_committed":$committed,"buckets_total":${Lineage.committed(outputRoot).size}}""")
+    println(s"""COMMIT {"batch_id":"$batchId","buckets_committed":${result.committed},"buckets_total":${Lineage.committed(outputRoot).size}}""")
     admin.foreach(_.stop())
     spark.stop()
   }

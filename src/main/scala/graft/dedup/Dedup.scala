@@ -1,5 +1,7 @@
 package graft.dedup
 
+import scala.concurrent.duration.DurationInt
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -287,16 +289,12 @@ object Dedup {
         .observe(obs, sum(when(col("nbr") < col("cluster"), lit(1L)).otherwise(lit(0L)))
           .as("changed"))
         .localCheckpoint()
-      changed = {
-        var tries = 0
-        var m = EU.observedOrEmpty(obs)
-        while (m.isEmpty && tries < 50) {
-          Thread.sleep(10); m = EU.observedOrEmpty(obs); tries += 1
-        }
-        m.get("changed") match {
-          case Some(v: java.lang.Long) => v.longValue()
-          case _ => merged.filter(col("nbr") < col("cluster")).count()
-        }
+      val observed =
+        try EU.awaitObserved(obs, 5.seconds).get("changed")
+        catch { case _: java.util.concurrent.TimeoutException => None }
+      changed = observed match {
+        case Some(v: java.lang.Long) => v.longValue()
+        case _ => merged.filter(col("nbr") < col("cluster")).count()
       }
       val propagated = merged.select(col("id"),
         least(col("cluster"), coalesce(col("nbr"), col("cluster"))).as("cluster"))

@@ -2,8 +2,13 @@ package graft.lineage
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.duration.DurationInt
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge => EU}
+
+import graft.functions.BucketTally
 
 /** Exactly-once resumable commits — the registrar upgraded for a batch
   * engine (north rule: "checkpoints per-partition offsets into a lineage
@@ -19,6 +24,11 @@ import org.apache.spark.sql.functions._
   * A resumed run skips every bucket whose marker exists and re-does the
   * rest — re-writing a bucket is idempotent (full overwrite before the
   * marker appears), so crash at ANY point yields exactly-once output.
+  *
+  * Like the reference's acks, which carry the counts the registrar
+  * records, the write itself counts what it wrote: a marker's rows and
+  * bytes are observed on the rows of the staging write, so a run is one
+  * SQL execution and never reads back the staged parquet.
   *
   * On a real cluster the same seam is an Iceberg snapshot commit; this
   * directory implementation keeps identical semantics without the runtime
@@ -87,6 +97,18 @@ object Lineage {
   private def deleteRecursively(p: Path): Unit =
     graft.util.Fs.deleteRecursively(p)
 
+  /** What one [[runObserving]] call committed, and the caller's observed
+    * aggregates over the rows it wrote, by name.
+    */
+  final case class Outcome(committed: Int, observed: Map[String, Any])
+
+  private val TallyCol = "_lineage_tally"
+
+  /** Longest wait for the write's observed metrics. They reach the driver
+    * on the listener bus, normally within milliseconds of the write.
+    */
+  private val ObservedTimeout = 60.seconds
+
   /** Process `df` into `root` exactly once, resumable.
     *
     * @param maxBucketsToCommit test hook: stop committing after N buckets
@@ -96,65 +118,58 @@ object Lineage {
     */
   def run(df: DataFrame, root: String, nBuckets: Int, batchId: String,
       keyCol: String = "conv_id",
-      maxBucketsToCommit: Int = Int.MaxValue): Int = {
+      maxBucketsToCommit: Int = Int.MaxValue): Int =
+    runObserving(df, root, nBuckets, batchId, Nil, keyCol, maxBucketsToCommit).committed
+
+  /** [[run]], also evaluating the aggregate columns `metrics` over every
+    * row this run writes (the uncommitted buckets only) and returning
+    * their values. The whole run is ONE SQL execution, the staging write:
+    * an `Observation` on the rows being written yields both these metrics
+    * and the per-bucket rows and bytes for the lineage markers, so nothing
+    * written is read back. Observed metrics are accumulators merged once
+    * per partition from the first successful attempt of the write's own
+    * result stage, so the counts are exact under task retries.
+    *
+    * With `maxBucketsToCommit` cutting the run short, `metrics` still
+    * cover every row staged, including those of the buckets not sealed.
+    */
+  def runObserving(df: DataFrame, root: String, nBuckets: Int, batchId: String,
+      metrics: Seq[Column], keyCol: String = "conv_id",
+      maxBucketsToCommit: Int = Int.MaxValue): Outcome = {
     requireSafeBatchId(batchId)
-    val spark = df.sparkSession
     val done = committed(root)
     val bucketed = df.withColumn(BucketCol, pmod(hash(col(keyCol)), lit(nBuckets)))
     val todo = bucketed.filter(!col(BucketCol).isin(done.toSeq: _*))
 
+    // per-bucket rows and text bytes for the markers, counted as the rows
+    // are written; a frame without a text column (the API is otherwise
+    // schema-generic) records bytes=0, and so does all-NULL text
+    val bytes = if (df.columns.contains("text")) octet_length(col("text")) else lit(0L)
+    val obs = Observation(s"lineage_$batchId")
+    val observed = todo.observe(obs,
+      BucketTally(col(BucketCol), bytes, nBuckets).as(TallyCol), metrics: _*)
+
     val staging = Paths.get(root, s"_staging_$batchId")
     deleteRecursively(staging)
     // one partitioned pass writes every uncommitted bucket
-    todo.write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
-
-    // per-bucket stats for the lineage entries — computed from the
-    // STAGED output, not from `todo`: the input plan may be a whole
-    // upstream pipeline, and aggregating it again would evaluate that
-    // pipeline a second time (at 100 TB, a second full pass). The staged
-    // parquet is the same rows already materialised; this scan prunes to
-    // the bucket partition column + text.
-    val hasStagedBuckets = Files.isDirectory(staging) && {
-      import scala.jdk.CollectionConverters._
-      val ls = Files.list(staging)
-      try ls.iterator().asScala.exists(_.getFileName.toString.startsWith(s"$BucketCol="))
-      finally ls.close()
-    }
-    val stats =
-      if (hasStagedBuckets)
-        // cast pins the partition-column key type: with
-        // spark.sql.sources.partitionColumnTypeInference.enabled=false the
-        // column reads back as StringType and a bare getInt would throw
-        spark.read.parquet(staging.toString)
-          .groupBy(col(BucketCol).cast("int").as(BucketCol))
-          // coalesce: a bucket whose rows all have NULL text sums to NULL
-          // and must commit with bytes=0, not crash the getLong; frames
-          // WITHOUT a text column (the API is otherwise schema-generic)
-          // record bytes=0 rather than failing after the staging write
-          .agg(count(lit(1)).as("rows"),
-            (if (df.columns.contains("text"))
-               coalesce(sum(octet_length(col("text"))), lit(0L))
-             else lit(0L)).as("bytes"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-      else Map.empty[Int, (Long, Long)] // empty write = nothing left to commit
+    observed.write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
+    val values = EU.awaitObserved(obs, ObservedTimeout)
+    val tally = values(TallyCol).asInstanceOf[collection.Seq[Long]]
 
     var committedNow = 0
-    val buckets = stats.keys.toSeq.sorted
-    for (b <- buckets if committedNow < maxBucketsToCommit) {
+    for (b <- 0 until nBuckets if tally(b) > 0 && committedNow < maxBucketsToCommit) {
       val src = staging.resolve(s"$BucketCol=$b")
       val dst = dataDir(root, b)
       if (Files.exists(src)) {
         deleteRecursively(dst) // idempotent re-do of an unsealed bucket
         Files.createDirectories(dst.getParent)
         Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-        val (rows, bytes) = stats(b)
-        writeMarker(root, Entry(b, rows, bytes, batchId))
+        writeMarker(root, Entry(b, tally(b), tally(nBuckets + b), batchId))
         committedNow += 1
       }
     }
     deleteRecursively(staging)
-    committedNow
+    Outcome(committedNow, values - TallyCol)
   }
 
   /** Read back all committed data. */

@@ -1,6 +1,9 @@
 package graft.metrics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+import graft.route.Router
 
 /** Per-run metrics report — the admin-API analog (SURVEY.md §3.3): the
   * reference exposes per-harvester `speed_lps`/`speed_bps`/
@@ -19,10 +22,38 @@ object Metrics {
       bytesPerSec: Double,
       sinks: Seq[SinkMetric])
 
-  def fromSinkCounts(sinkCounts: DataFrame, wallClockSec: Double): Report = {
-    val rows = sinkCounts.collect().map { r =>
+  def fromSinkCounts(sinkCounts: DataFrame, wallClockSec: Double): Report =
+    report(sinkCounts.collect().map { r =>
       SinkMetric(r.getAs[String]("sink"), r.getAs[Long]("turns"), r.getAs[Long]("bytes"))
-    }.toSeq.sortBy(_.sink)
+    }.toSeq, wallClockSec)
+
+  /** Per-sink turn and text-byte aggregates over a routed frame, for
+    * `Dataset.observe` on the rows a job writes (see
+    * [[graft.lineage.Lineage.runObserving]]): the counts come from the
+    * write itself, with no scan of their own. [[fromObserved]] reads
+    * them back.
+    */
+  def sinkObservations(sinks: Seq[String]): Seq[Column] = sinks.flatMap { s =>
+    val in = col(Router.SinkCol) === s
+    Seq(count_if(in).as(s"turns:$s"),
+      sum(when(in, octet_length(col("text"))).otherwise(lit(0))).as(s"bytes:$s"))
+  }
+
+  /** The report from [[sinkObservations]]' values. Sinks no row went to
+    * are left out, as a group-by over the written rows would leave them.
+    */
+  def fromObserved(observed: Map[String, Any], sinks: Seq[String],
+      wallClockSec: Double): Report = {
+    def long(k: String): Long = observed.get(k) match {
+      case Some(v: java.lang.Long) => v.longValue()
+      case _ => 0L // sum over no rows, or over NULL text only
+    }
+    report(sinks.map(s => SinkMetric(s, long(s"turns:$s"), long(s"bytes:$s")))
+      .filter(_.turns > 0), wallClockSec)
+  }
+
+  private def report(sinks: Seq[SinkMetric], wallClockSec: Double): Report = {
+    val rows = sinks.sortBy(_.sink)
     val totalTurns = rows.map(_.turns).sum
     val totalBytes = rows.map(_.bytes).sum
     Report(totalTurns, wallClockSec,

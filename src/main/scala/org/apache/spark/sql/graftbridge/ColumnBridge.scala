@@ -6,6 +6,11 @@
   */
 package org.apache.spark.sql.graftbridge
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.FiniteDuration
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -14,10 +19,22 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Non-blocking read of an [[org.apache.spark.sql.Observation]]'s
-    * metrics (`getOrEmpty` is `private[sql]`; the public `get` blocks
-    * with no timeout, which a caller that needs a fallback can't risk).
+  /** Block until an [[org.apache.spark.sql.Observation]] holds its
+    * metrics, for at most `timeout`. Observed metrics reach the driver on
+    * the listener bus, shortly after the action that computed them
+    * returns; the public `get` waits with no bound, so a missing delivery
+    * would hang the caller. On expiry this throws a `TimeoutException`
+    * naming the observation.
     */
-  def observedOrEmpty(obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    obs.getOrEmpty
+  def awaitObserved(obs: org.apache.spark.sql.Observation,
+      timeout: FiniteDuration): Map[String, Any] = {
+    val row =
+      try Await.result(obs.future, timeout)
+      catch {
+        case _: TimeoutException =>
+          throw new TimeoutException(
+            s"observation '${obs.name}' delivered no metrics within $timeout")
+      }
+    row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+  }
 }

@@ -1,9 +1,9 @@
 package graft.metrics
 
-import graft.SparkTestBase
+import graft.{PipelineOracle, RunPipeline, SparkTestBase, TranscriptPipeline}
+import graft.lineage.Lineage
 import graft.model.TranscriptGen
 import graft.route.Router
-import graft.TranscriptPipeline
 import org.apache.spark.sql.functions._
 
 class MetricsSpec extends SparkTestBase {
@@ -94,27 +94,59 @@ class MetricsSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft-runpipe").toString
     TranscriptGen.generate(spark, 8L, 25L, 4).toDF()
       .write.mode("overwrite").parquet(s"$tmp/in")
-    // note: RunPipeline builds its own session config via getOrCreate —
-    // reuses this suite's session in-process
-    RunPipelineHarness.run(spark, s"$tmp/in", s"$tmp/out", "b1", 8)
-    val n1 = graft.lineage.Lineage.readData(spark, s"$tmp/out").count()
+    // RunPipeline.run is main's body on this suite's session
+    val first = RunPipeline.run(spark, s"$tmp/in", s"$tmp/out", "b1", 8, TranscriptPipeline.stages)
+    val n1 = Lineage.readData(spark, s"$tmp/out").count()
+    assert(first.committed == 8 && first.report.inputTurns == n1)
     // second run is a no-op (all buckets sealed)
-    val committed = graft.lineage.Lineage.run(
+    val committed = Lineage.run(
       TranscriptPipeline.run(spark, spark.read.parquet(s"$tmp/in")),
       s"$tmp/out", 8, "b2")
     assert(committed == 0)
-    assert(graft.lineage.Lineage.readData(spark, s"$tmp/out").count() == n1)
+    assert(Lineage.readData(spark, s"$tmp/out").count() == n1)
     assert(n1 == spark.read.parquet(s"$tmp/in").count())
   }
-}
 
-/** In-process harness mirroring RunPipeline.main's body (main would spawn
-  * session config conflicts inside the shared test JVM).
-  */
-object RunPipelineHarness {
-  def run(spark: org.apache.spark.sql.SparkSession, in: String, out: String,
-      batchId: String, buckets: Int): Unit = {
-    val assigned = TranscriptPipeline.run(spark, spark.read.parquet(in))
-    graft.lineage.Lineage.run(Router.stripMeta(assigned), out, buckets, batchId)
+  private def sinkMap(report: Metrics.Report): Map[String, (Long, Long)] =
+    report.sinks.map(s => s.sink -> (s.turns, s.bytes)).toMap
+
+  private def rescan(root: String, buckets: Set[Int]): Map[String, (Long, Long)] =
+    Router.sinkCounts(Lineage.readData(spark, root, buckets)).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  test("RunPipeline's observed per-sink counts equal the oracle's and a re-scan") {
+    val (seed, nConvs) = (21L, 40L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-runpipe").toString
+    TranscriptGen.generate(spark, seed, nConvs, 4).toDF()
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    val result = RunPipeline.run(spark, s"$tmp/in", s"$tmp/out", "b1", 8, TranscriptPipeline.stages)
+    val oracle = TranscriptGen.generateLocal(seed, nConvs).map(PipelineOracle.process)
+      .groupBy(_.sink).view.mapValues { os =>
+        (os.size.toLong, os.map(_.turn.text.getBytes("UTF-8").length.toLong).sum)
+      }.toMap
+    assert(sinkMap(result.report) == oracle)
+    assert(sinkMap(result.report) == rescan(s"$tmp/out", Lineage.committed(s"$tmp/out")))
+  }
+
+  test("a resumed RunPipeline reports only the rows it committed") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-runpipe").toString
+    TranscriptGen.generate(spark, 22L, 40L, 4).toDF()
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    val out = s"$tmp/out"
+    // an earlier run that sealed three buckets, then crashed
+    Lineage.run(Router.stripMeta(TranscriptPipeline.run(spark, spark.read.parquet(s"$tmp/in"))),
+      out, 8, "b1", maxBucketsToCommit = 3)
+    val earlier = Lineage.committed(out)
+    assert(earlier.size == 3)
+    val resumed = RunPipeline.run(spark, s"$tmp/in", out, "b2", 8, TranscriptPipeline.stages)
+    assert(resumed.committed == 5)
+    val sealedNow = Lineage.committed(out) -- earlier
+    assert(sinkMap(resumed.report) == rescan(out, sealedNow))
+    assert(resumed.report.inputTurns ==
+      spark.read.parquet(s"$tmp/in").count() - Lineage.readData(spark, out, earlier).count())
+    // a re-run over the fully committed root commits and reports nothing
+    val noop = RunPipeline.run(spark, s"$tmp/in", out, "b3", 8, TranscriptPipeline.stages)
+    assert(noop.committed == 0 && noop.report.inputTurns == 0 && noop.report.sinks.isEmpty)
+    assert(noop.report.turnsPerSec == 0.0)
   }
 }
