@@ -6,6 +6,7 @@ import graft.lineage.Lineage
 import graft.metrics.{Metrics, PartitionMetrics}
 import graft.pipeline.Stage
 import graft.route.Router
+import graft.util.NioLocalFileSystem
 
 /** Production entry point (spark-submit main): the resumable, metered
   * end-to-end job —
@@ -30,6 +31,13 @@ import graft.route.Router
   * So `SINKS` counts the rows THIS run committed: a resumed run reports
   * only the buckets it sealed, and a re-run over a fully committed root
   * reports none. `COMMIT`'s `buckets_total` covers every run.
+  *
+  * [[main]] registers [[graft.util.NioLocalFileSystem]] for `file:` paths
+  * unless `spark.hadoop.fs.file.impl` is already set (spark-submit `--conf`
+  * values are system properties). Without libhadoop, Hadoop's own local
+  * filesystem starts a `chmod` process for every file, checksum and
+  * directory the write creates, 768 per 256-file job; that class sets the
+  * same modes in-process.
   */
 object RunPipeline {
 
@@ -61,6 +69,8 @@ object RunPipeline {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    val (fsKey, fsImpl) = NioLocalFileSystem.SessionConf
+    if (!sys.props.contains(fsKey)) builder.config(fsKey, fsImpl)
     // default master only when not provided by spark-submit
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")

@@ -30,6 +30,13 @@ import graft.functions.BucketTally
   * bytes are observed on the rows of the staging write, so a run is one
   * SQL execution and never reads back the staged parquet.
   *
+  * The staging write creates two files per bucket per writing task (the
+  * parquet part and its `.crc`) plus a directory per bucket per task. On a
+  * session without libhadoop, Hadoop's stock local filesystem sets each
+  * one's mode by starting a `chmod` process; `RunPipeline` sessions (when
+  * `spark.hadoop.fs.file.impl` is unset) and the test session write
+  * through [[graft.util.NioLocalFileSystem]], which does it in-process.
+  *
   * On a real cluster the same seam is an Iceberg snapshot commit; this
   * directory implementation keeps identical semantics without the runtime
   * jar (SURVEY.md §7 `TableIO` seam).

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.NioLocalFileSystem
+
 object SparkTestBase {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -12,6 +14,8 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      // write through the same in-process-chmod local FS as RunPipeline
+      .config(Map(NioLocalFileSystem.SessionConf))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
